@@ -14,8 +14,10 @@ this the hard way: a 131-entry per-query map made the line ~4 KB, the head
 of the line fell off the window, and the round's bench artifact recorded
 ``parsed: null``). So the printed line is SIZE-CAPPED: it always carries
 metric/value/unit/sf plus the slowest queries that fit in the budget, and
-the COMPLETE per-query map is written to BENCH_FULL.json next to this file
-(path echoed in the line under "full").
+the COMPLETE per-query map is written next to this file to
+BENCH_FULL_c<cpus>.json and, on the host's default cpus count, also to
+BENCH_FULL.json (the file echoed in the line under "full"). A scaling pass
+(SPARK_GRAFT_CPUS=N) therefore never overwrites the default map.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from nzwirelessmap_fetch_spark.plans import registry  # noqa: E402
-from nzwirelessmap_fetch_spark.session import get_spark  # noqa: E402
+from nzwirelessmap_fetch_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -170,7 +172,11 @@ def main() -> None:
             timings[name] = min(timings[name], run_one(name, fn))
 
     total = round(sum(timings.values()), 3)
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json")
+    # Every run keeps its own per-cpus map; a run on the host's default
+    # count also refreshes the BENCH_FULL.json alias.
+    full_names = [f"BENCH_FULL_c{DEFAULT_CPUS}.json"]
+    if DEFAULT_CPUS == (os.cpu_count() or 8):
+        full_names.append("BENCH_FULL.json")
     full_payload = {
         "metric": "suite_wall_clock",
         "value": total,
@@ -180,10 +186,13 @@ def main() -> None:
         "elapsed_s": round(time.perf_counter() - t_start, 3),
         "retried": retried,
         "n_queries": len(timings),
+        "cpus": DEFAULT_CPUS,
     }
-    with open(full_path, "w") as fh:
-        json.dump(full_payload, fh, indent=1, sort_keys=True)
-        fh.write("\n")
+    here = os.path.dirname(os.path.abspath(__file__))
+    for name in full_names:
+        with open(os.path.join(here, name), "w") as fh:
+            json.dump(full_payload, fh, indent=1, sort_keys=True)
+            fh.write("\n")
 
     # Size-capped stdout line (see module docstring): headline numbers plus
     # as many of the SLOWEST queries as fit. Slowest-first is the right
@@ -191,7 +200,7 @@ def main() -> None:
     # sub-second queries carry no signal a total doesn't already carry.
     LINE_BUDGET = 1800
     compact = dict(full_payload)
-    compact["full"] = "BENCH_FULL.json"
+    compact["full"] = full_names[-1]
     compact["queries"] = {}
     compact["queries_omitted"] = len(timings)
     by_cost = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))

@@ -253,7 +253,8 @@ def parse_byte_string(value: object, default: int) -> int:
     renderings ('134217728b', '128m', '1g'), mirroring
     ``JavaUtils.byteStringAsBytes``. An unset/unparseable value falls
     back to ``default`` instead of raising — conf parsing must never
-    take a query down on a session the repo didn't configure."""
+    take a query down on a session the repo didn't configure. A size of
+    zero or less is unparseable too: callers divide by it."""
     import re
 
     if value is None:
@@ -264,7 +265,8 @@ def parse_byte_string(value: object, default: int) -> int:
     mult = _BYTE_SUFFIXES.get(m.group(2).lower())
     if mult is None:
         return default
-    return int(m.group(1)) * mult
+    nbytes = int(m.group(1)) * mult
+    return nbytes if nbytes > 0 else default
 
 
 def parquet_ts_unit(path: str, column: str) -> str:

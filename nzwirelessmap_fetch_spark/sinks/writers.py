@@ -11,8 +11,10 @@ and the marker doubles as the idempotency key (fetch.go:55-67).
 Spark-native translation:
 - headered CSV / NDJSON: ``df.write`` (distributed, committer-atomic).
 - bug-compat single JSON array (csv2json2.py:3 emits ONE array, not
-  NDJSON): requires driver materialization → hard-gated by a row budget.
-  At 100 TB you use NDJSON + a manifest; the array writer exists for
+  NDJSON): requires driver materialization → hard-gated by a row budget
+  (``SINGLE_ARRAY_MAX_ROWS``). The materialization is one Arrow collect,
+  serialized once; ``latest`` and ``<version>`` get the same bytes. At
+  100 TB you use NDJSON + a manifest; the array writer exists for
   byte-level parity on small results only.
 - all-string projection: P16 — every value stringified, NULL → '' (the
   CSV boundary semantics).
@@ -49,19 +51,29 @@ def write_ndjson(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def write_single_json_array(df: DataFrame, path: str | Path) -> None:
+def _json_array_text(df: DataFrame) -> tuple[str, int]:
     """P17 bug-compat: ONE JSON array of all-string records
-    (csv2json2.py:1-3). Materializes on the driver — guarded."""
+    (csv2json2.py:1-3) as text, plus its row count. Materializes on the
+    driver in one Arrow collect — guarded by the row budget, checked
+    before anything is collected."""
     n = df.count()
     if n > SINGLE_ARRAY_MAX_ROWS:
         raise ValueError(
             f"single-array JSON writer is driver-side; {n} rows exceeds the "
             f"{SINGLE_ARRAY_MAX_ROWS} budget — use write_ndjson at scale"
         )
-    records = [row.asDict() for row in to_all_strings(df).collect()]
+    records = to_all_strings(df).toArrow().to_pylist()
+    return json.dumps(records), len(records)
+
+
+def _write_text(path: str | Path, text: str) -> None:
     Path(path).parent.mkdir(parents=True, exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(records, f)
+    Path(path).write_text(text)
+
+
+def write_single_json_array(df: DataFrame, path: str | Path) -> None:
+    """P17 bug-compat single JSON array file (see ``_json_array_text``)."""
+    _write_text(path, _json_array_text(df)[0])
 
 
 class VersionedArtifactSink:
@@ -109,15 +121,17 @@ class VersionedArtifactSink:
         fields = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
         self._log._commit_logged(artifact, version, fields, op=op)
 
-    def write_versioned_json(self, df: DataFrame, artifact: str, version: str) -> None:
+    def write_versioned_json(self, df: DataFrame, artifact: str, version: str) -> int:
         """latest first, version object, then the LOGGED commit last —
-        crash-safe completion semantics through the shared protocol."""
-        self.write_json_array_file(df, artifact, "latest")
-        self.write_json_array_file(df, artifact, version)
+        crash-safe completion semantics through the shared protocol.
+        Serializes once: both objects get the same bytes. A result over
+        the row budget raises before either object is written. Returns
+        the row count."""
+        text, rows = _json_array_text(df)
+        _write_text(self._path(artifact, "latest"), text)
+        _write_text(self._path(artifact, version), text)
         self._commit(df, artifact, version, "artifact-json")
-
-    def write_json_array_file(self, df: DataFrame, artifact: str, version: str) -> None:
-        write_single_json_array(df, self._path(artifact, version))
+        return rows
 
     def write_versioned_csv(self, df: DataFrame, artifact: str, version: str) -> None:
         write_headered_csv(df, str(self._path(artifact, version)))

@@ -12,7 +12,10 @@ import pytest
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 from nzwirelessmap_fetch_spark.pipeline import ARTIFACT_JSON, run_pipeline
+from nzwirelessmap_fetch_spark.plans.flagship import flagship
+from nzwirelessmap_fetch_spark.sinks import writers
 from nzwirelessmap_fetch_spark.sinks.writers import (
+    VersionedArtifactSink,
     to_all_strings,
     write_single_json_array,
 )
@@ -30,6 +33,43 @@ def test_pipeline_runs_then_skips(spark, tmp_path):
     # latest pointer exists alongside the versioned marker (P18)
     assert (tmp_path / ARTIFACT_JSON / "latest").exists()
     assert (tmp_path / ARTIFACT_JSON / "v1").exists()
+
+
+def test_pipeline_materializes_flagship_once(spark, tmp_path):
+    """One full run executes the flagship join once: its Spark jobs stay
+    under twice those of one no-op execution of the same plan (re-running
+    the join per artifact costs several times that), and ``latest`` and
+    the version object are the same bytes."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("test-flagship-noop", "flagship noop")
+        flagship(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+        sc.setJobGroup("test-pipeline-run", "pipeline run")
+        report = run_pipeline(spark, SF_SMOKE, tmp_path, version="v1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    noop_jobs = len(tracker.getJobIdsForGroup("test-flagship-noop"))
+    run_jobs = len(tracker.getJobIdsForGroup("test-pipeline-run"))
+    assert report["rows"] > 0
+    assert 0 < run_jobs < 2 * noop_jobs, (run_jobs, noop_jobs)
+    latest = (tmp_path / ARTIFACT_JSON / "latest").read_bytes()
+    assert latest == (tmp_path / ARTIFACT_JSON / "v1").read_bytes()
+    assert len(json.loads(latest)) == report["rows"]
+
+
+def test_versioned_json_over_budget_writes_nothing(spark, tmp_path, monkeypatch):
+    """The driver-memory guard refuses before either JSON object or the
+    commit is written, so a re-run is not skipped as complete."""
+    df = spark.range(5)
+    monkeypatch.setattr(writers, "SINGLE_ARRAY_MAX_ROWS", 4)
+    sink = VersionedArtifactSink(tmp_path)
+    with pytest.raises(ValueError, match="budget"):
+        sink.write_versioned_json(df, ARTIFACT_JSON, "v1")
+    assert not (tmp_path / ARTIFACT_JSON / "latest").exists()
+    assert not (tmp_path / ARTIFACT_JSON / "v1").exists()
+    assert sink.exists(ARTIFACT_JSON, "v1") is False
 
 
 def test_single_json_array_all_strings(spark, tmp_path):

@@ -94,10 +94,11 @@ def test_no_corpus_sized_broadcast_hints():
 
 
 def test_no_unguarded_driver_materialization():
-    """Pin the README scale claim: `.collect()`/`.toPandas()` appear in the
-    engine exactly five times, all bounded — the row-budget-guarded
-    single-array JSON writer (P17 bug-compat), the N_QUERIES-row query-set
-    fetch in the numpy top-k (the broadcast side of a top-k, not data),
+    """Pin the README scale claim: `.collect()`/`.toPandas()`/`.toArrow()`
+    appear in the engine exactly five times, all bounded — the
+    row-budget-guarded single-array JSON writer (P17 bug-compat; one
+    Arrow collect), the N_QUERIES-row query-set fetch in the numpy top-k
+    (the broadcast side of a top-k, not data),
     the |event-types|-row state-list fetch seeding the Markov power
     iteration (the matrix dimension, never data), the 2-row corpus-totals
     fetch in DSIR scoring (two scalars from ONE pass over the persisted
@@ -113,8 +114,8 @@ def test_no_unguarded_driver_materialization():
     hits: collections.Counter = collections.Counter()
     for p in sorted(root.rglob("*.py")):
         src = p.read_text()
-        hits[str(p.relative_to(root))] += src.count(".collect()") + src.count(
-            ".toPandas()"
+        hits[str(p.relative_to(root))] += sum(
+            src.count(call) for call in (".collect()", ".toPandas()", ".toArrow()")
         )
     nonzero = {k: v for k, v in hits.items() if v}
     assert nonzero == {

@@ -38,6 +38,14 @@ def test_parse_byte_string_suffixes():
     assert parse_byte_string("", default=7) == 7
 
 
+def test_parse_byte_string_nonpositive_falls_back():
+    """A zero or negative size is unparseable: ``table_parallel`` divides
+    by it, so '0'/'0b' used to raise ZeroDivisionError there."""
+    assert parse_byte_string("0", default=7) == 7
+    assert parse_byte_string("0b", default=7) == 7
+    assert parse_byte_string("-1", default=7) == 7
+
+
 def test_table_parallel_survives_suffixed_conf(spark):
     """Reproduces the exact driver failure mode in-process: the conf set
     to Spark's suffixed rendering, then a table_parallel scan end-to-end."""
@@ -68,11 +76,12 @@ def test_vanilla_session_table_parallel_consumers():
             .appName("vanilla-driver-like")
             .getOrCreate()
         )
-        # Prove we really are on Spark's suffixed default rendering.
-        v = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        assert v.endswith("b"), v
+        from nzwirelessmap_fetch_spark.catalog import Catalog, parse_byte_string
 
-        from nzwirelessmap_fetch_spark.catalog import Catalog
+        # Prove the vanilla session's own rendering of the conf parses.
+        v = spark.conf.get("spark.sql.files.maxPartitionBytes")
+        assert parse_byte_string(v, -1) == 134217728, v
+
         from nzwirelessmap_fetch_spark.operators.similarity import _emb_parallel
         from nzwirelessmap_fetch_spark.operators.mlprep import ml_feature_hashing
         from nzwirelessmap_fetch_spark.operators.dedup import (

@@ -115,7 +115,7 @@ def test_winnow_adaptive_capped_subset_of_exact(spark):
     assert sum(1 for k in _WINNOW_PAIRS_CACHE if k[1] == SF_SMOKE) == 2
 
 
-def _txn_stress_worker(root: str, wid: int, n_rounds: int, q) -> None:
+def _txn_stress_worker(root: str, wid: int, n_rounds: int, q, start) -> None:
     """Child-process body for the commit-admission stress: each round
     writes a pyarrow data dir, then races `_commit_logged` with
     expect_parent pinned to the base it resolved — retrying on
@@ -137,8 +137,12 @@ def _txn_stress_worker(root: str, wid: int, n_rounds: int, q) -> None:
         d = sink._dir("t", version)
         d.mkdir(parents=True, exist_ok=True)
         pq.write_table(pa.table({"k": [wid], "r": [r]}), d / "part-0.parquet")
+        base = sink.resolve("t")
+        # every worker commits the round on a base read before the
+        # barrier, so the race is real on any host load: all but the
+        # first committer must take the conflict path
+        start.wait(timeout=120)
         while True:
-            base = sink.resolve("t")
             try:
                 sink._commit_logged(
                     "t",
@@ -151,6 +155,7 @@ def _txn_stress_worker(root: str, wid: int, n_rounds: int, q) -> None:
                 break
             except SnapshotConflictError:
                 conflicts += 1
+                base = sink.resolve("t")
     q.put((wid, conflicts))
 
 
@@ -180,9 +185,9 @@ def test_txn_commit_admission_multiprocess_linearizable(tmp_path):
 
     n_workers, n_rounds = 4, 12
     ctx = mp.get_context("spawn")  # no JVM/fork hazards in children
-    q = ctx.Queue()
+    q, start = ctx.Queue(), ctx.Barrier(n_workers)
     procs = [
-        ctx.Process(target=_txn_stress_worker, args=(root, w, n_rounds, q))
+        ctx.Process(target=_txn_stress_worker, args=(root, w, n_rounds, q, start))
         for w in range(n_workers)
     ]
     for p in procs:
