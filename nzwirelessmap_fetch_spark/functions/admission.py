@@ -64,18 +64,35 @@ def disk_free_bytes() -> int:
     return shutil.disk_usage(spill_dir.split(",")[0]).free
 
 
-def mem_available_bytes() -> int:
-    """MemAvailable from /proc/meminfo; falls back to total RAM / 2
-    on hosts without it (macOS)."""
+def _meminfo_bytes(field: str) -> int | None:
+    """One ``/proc/meminfo`` field in bytes; None where the file or the
+    field is missing (macOS)."""
     try:
         with open("/proc/meminfo") as f:
             for line in f:
-                if line.startswith("MemAvailable:"):
+                if line.startswith(f"{field}:"):
                     return int(line.split()[1]) * 1024
     except OSError:
         pass
-    pages = os.sysconf("SC_PHYS_PAGES")
-    return pages * os.sysconf("SC_PAGE_SIZE") // 2
+    return None
+
+
+def _phys_mem_bytes() -> int:
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
+
+def mem_available_bytes() -> int:
+    """MemAvailable from /proc/meminfo; falls back to total RAM / 2
+    on hosts without it (macOS)."""
+    avail = _meminfo_bytes("MemAvailable")
+    return avail if avail is not None else _phys_mem_bytes() // 2
+
+
+def mem_total_bytes() -> int:
+    """MemTotal from /proc/meminfo; falls back to the physical page
+    count on hosts without it."""
+    total = _meminfo_bytes("MemTotal")
+    return total if total is not None else _phys_mem_bytes()
 
 
 @lru_cache(maxsize=1)

@@ -17,8 +17,9 @@ dedup/quality families.
                         APPROX_QUANTILES) actually uses, instead of a
                         global sort.
 - ml_feature_hashing    the hashing trick: fixed-dim token-count
-                        vectors with md5-derived buckets — no
-                        vocabulary state, zero-shuffle row-local.
+                        vectors (as comma-joined text) with md5-derived
+                        buckets — no vocabulary state, zero-shuffle
+                        row-local.
 - ml_standard_scaler    z-score standardization from exact decimal
                         moment sums (sketch pass + apply pass).
 
@@ -169,6 +170,21 @@ FROM base b CROSS JOIN earr e
 
 HASH_DIM = 16  # feature-hashing bucket count
 
+# One document's token-count vector over ``text``, emitted as its
+# comma-joined decimal text ("0,2,1,…", HASH_DIM counts): a scalar that
+# a row sort over all columns can order, where a list cell cannot. One
+# md5 bucket per token, folded into the count array with integer
+# increments; NULL text folds to a NULL array and so a NULL string.
+FEATURE_COUNTS_SQL = f"""
+  array_join(
+    aggregate(
+      transform(split(text, ' '),
+                t -> CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT) % {HASH_DIM}),
+      array_repeat(0, {HASH_DIM}),
+      (acc, b) -> transform(acc, (x, i) -> IF(i = b, x + 1, x))),
+    ',')
+"""
+
 
 def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The hashing trick (fastText / Vowpal Wabbit feature layer): each
@@ -179,45 +195,38 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Bucket hash: first 8 hex chars of md5(token) as an unsigned int mod
     ``HASH_DIM`` — both engines derive it bit-identically (same idiom as
-    the corpus shingle keys). Plan: row-local — tokens explode INSIDE
-    the array fold, never into rows; at 100 TB this is pure map-side
-    codegen after the scan (the only exchange is the small-fixture
-    round-robin that ``table_parallel`` may add, see the r11 note).
+    the corpus shingle keys). The vector ships as comma-joined text
+    (``FEATURE_COUNTS_SQL``; DuckDB ``array_to_string`` on the oracle
+    side), so every output column is a scalar. Plan: row-local — tokens
+    explode INSIDE the array fold, never into rows; at 100 TB this is
+    pure map-side codegen after the scan (the only exchange is the
+    small-fixture round-robin that ``table_parallel`` may add, see the
+    r11 note).
 
     r11 (guide §1.2 per-task work): the original expression filtered the
     token array once PER BUCKET (``transform(sequence(0,15), k ->
     size(filter(tokens, t -> md5-bucket(t) = k)))``) — HASH_DIM md5
     evaluations per token. Rewritten as one bucket pass (md5 once per
     token) folded into the count array with integer increments; counts
-    are identical by construction (same bucket value, same k order), and
-    a NULL-text guard reproduces the old per-element-NULL shape exactly.
+    are identical by construction (same bucket value, same k order).
     The scan rides ``table_parallel`` — the md5 fold is pure scan-side
     compute, serialized on ONE task by the single-row-group fixture
     files (same class as the simhash signature pass).
     """
     d = Catalog(spark, sf_dir).table_parallel("documents")
-    bucket = f"CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT) % {HASH_DIM}"
-    vec = f"""
-      IF(text IS NULL,
-         transform(sequence(0, {HASH_DIM - 1}), k -> CAST(NULL AS INT)),
-         aggregate(
-           transform(split(text, ' '), t -> {bucket}),
-           array_repeat(0, {HASH_DIM}),
-           (acc, b) -> transform(acc, (x, i) -> IF(i = b, x + 1, x))))
-    """
     return d.select(
         "doc_id",
-        F.expr(vec).alias("feature_counts"),
+        F.expr(FEATURE_COUNTS_SQL).alias("feature_counts"),
         F.size(F.split("text", " ")).alias("n_tokens"),
     )
 
 
 ML_FEATURE_HASHING_SQL = f"""
 SELECT doc_id,
-       list_transform(range(0, {HASH_DIM}), k ->
+       array_to_string(list_transform(range(0, {HASH_DIM}), k ->
          CAST(LEN(list_filter(string_split(text, ' '),
                   t -> ('0x' || substr(md5(t), 1, 8))::BIGINT
-                       % {HASH_DIM} = k)) AS INT)) AS feature_counts,
+                       % {HASH_DIM} = k)) AS INT)), ',') AS feature_counts,
        CAST(LEN(string_split(text, ' ')) AS INT) AS n_tokens
 FROM documents
 """

@@ -15,6 +15,9 @@ Scale notes (100 TB design point):
   in Arrow record batches, never row-at-a-time pickles.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive-UTC) and are deployment-independent.
+- The driver heap defaults to a share of the host's RAM
+  (``default_driver_memory``), never a fixed size the host may not have;
+  ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -23,7 +26,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .functions.admission import mem_total_bytes
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+DRIVER_MEM_FRACTION = 0.6  # of host RAM: the rest is for Python workers and the OS
+DRIVER_MEM_CAP_MB = 48 * 1024  # the heap the engine was sized on (32 cores)
+
+
+def default_driver_memory(host_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a host with ``host_bytes`` of RAM
+    (default: this host's MemTotal): ``DRIVER_MEM_FRACTION`` of it,
+    capped at ``DRIVER_MEM_CAP_MB``, in Spark's ``<n>m`` form."""
+    host = mem_total_bytes() if host_bytes is None else host_bytes
+    mb = min(DRIVER_MEM_CAP_MB, int(host * DRIVER_MEM_FRACTION) // 2**20)
+    return f"{max(mb, 1)}m"
 
 
 def get_spark(
@@ -48,7 +65,10 @@ def get_spark(
         .config("spark.sql.cbo.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # 128 MiB scan partitions: keeps partition count proportional to
         # data volume, so the same code ships to a 1000-executor cluster.

@@ -10,20 +10,26 @@ and the marker doubles as the idempotency key (fetch.go:55-67).
 
 Spark-native translation:
 - headered CSV / NDJSON: ``df.write`` (distributed, committer-atomic).
+  The CSV is RFC-4180, as ``sqlite3 .mode csv`` writes it: a quote
+  inside a quoted field is doubled and surrounding whitespace is kept.
 - bug-compat single JSON array (csv2json2.py:3 emits ONE array, not
-  NDJSON): requires driver materialization → hard-gated by a row budget
-  (``SINGLE_ARRAY_MAX_ROWS``). The materialization is one Arrow collect,
-  serialized once; ``latest`` and ``<version>`` get the same bytes. At
-  100 TB you use NDJSON + a manifest; the array writer exists for
-  byte-level parity on small results only.
-- all-string projection: P16 — every value stringified, NULL → '' (the
-  CSV boundary semantics).
+  NDJSON): csv2json2.py over the committed CSV part files
+  (``csv_json_array``) — ``csv.DictReader`` records, every value a
+  string, NULL → '' (P16, the CSV boundary semantics). No Spark job runs
+  for it; its only driver memory is the record list, hard-gated by a row
+  budget (``SINGLE_ARRAY_MAX_ROWS``) while the rows stream in. At 100 TB
+  you use NDJSON + a manifest; the array writer exists for byte-level
+  parity on small results only. A frame's timestamps render in the CSV's
+  ISO form (``2024-01-02T03:04:05.000Z``).
 """
 
 from __future__ import annotations
 
+import csv
 import json
 import os
+import shutil
+import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame
@@ -42,8 +48,16 @@ def to_all_strings(df: DataFrame) -> DataFrame:
 
 
 def write_headered_csv(df: DataFrame, path: str) -> None:
-    """P15: headered CSV (sqlite3 ``.headers on`` / ``.mode csv``)."""
-    df.write.mode("overwrite").option("header", True).csv(path)
+    """P15: headered RFC-4180 CSV (sqlite3 ``.headers on`` / ``.mode
+    csv``): ``"`` escapes itself, leading/trailing whitespace is data."""
+    (
+        df.write.mode("overwrite")
+        .option("header", True)
+        .option("escape", '"')
+        .option("ignoreLeadingWhiteSpace", False)
+        .option("ignoreTrailingWhiteSpace", False)
+        .csv(path)
+    )
 
 
 def write_ndjson(df: DataFrame, path: str) -> None:
@@ -51,18 +65,25 @@ def write_ndjson(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
 
 
-def _json_array_text(df: DataFrame) -> tuple[str, int]:
-    """P17 bug-compat: ONE JSON array of all-string records
-    (csv2json2.py:1-3) as text, plus its row count. Materializes on the
-    driver in one Arrow collect — guarded by the row budget, checked
-    before anything is collected."""
-    n = df.count()
-    if n > SINGLE_ARRAY_MAX_ROWS:
-        raise ValueError(
-            f"single-array JSON writer is driver-side; {n} rows exceeds the "
-            f"{SINGLE_ARRAY_MAX_ROWS} budget — use write_ndjson at scale"
-        )
-    records = to_all_strings(df).toArrow().to_pylist()
+def csv_json_array(csv_dir: str | Path) -> tuple[str, int]:
+    """P17 bug-compat: csv2json2.py over a headered CSV directory — ONE
+    JSON array of the ``csv.DictReader`` records of its part files in
+    name (partition) order, as text, plus the record count. Streams the
+    rows and raises as soon as one would exceed the row budget, so the
+    driver never holds more than ``SINGLE_ARRAY_MAX_ROWS`` records. A
+    field over ``csv.field_size_limit()`` (128 KiB by default) raises
+    ``csv.Error``, as it does in csv2json2.py."""
+    records: list[dict] = []
+    for part in sorted(Path(csv_dir).glob("part-*.csv")):
+        with open(part, newline="", encoding="utf-8") as f:
+            for row in csv.DictReader(f):
+                if len(records) == SINGLE_ARRAY_MAX_ROWS:
+                    raise ValueError(
+                        "single-array JSON writer is driver-side; the result "
+                        f"exceeds the {SINGLE_ARRAY_MAX_ROWS}-row budget — "
+                        "use write_ndjson at scale"
+                    )
+                records.append(row)
     return json.dumps(records), len(records)
 
 
@@ -72,8 +93,18 @@ def _write_text(path: str | Path, text: str) -> None:
 
 
 def write_single_json_array(df: DataFrame, path: str | Path) -> None:
-    """P17 bug-compat single JSON array file (see ``_json_array_text``)."""
-    _write_text(path, _json_array_text(df)[0])
+    """P17 bug-compat single JSON array file: ``df`` goes through the
+    headered CSV writer into a sibling temporary directory, which
+    ``csv_json_array`` converts (see there)."""
+    out = Path(path)
+    out.parent.mkdir(parents=True, exist_ok=True)
+    tmp = Path(tempfile.mkdtemp(prefix=f".{out.name}.", dir=out.parent))
+    try:
+        write_headered_csv(df, str(tmp / "csv"))
+        text, _ = csv_json_array(tmp / "csv")
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    out.write_text(text)
 
 
 class VersionedArtifactSink:
@@ -121,16 +152,23 @@ class VersionedArtifactSink:
         fields = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
         self._log._commit_logged(artifact, version, fields, op=op)
 
-    def write_versioned_json(self, df: DataFrame, artifact: str, version: str) -> int:
-        """latest first, version object, then the LOGGED commit last —
-        crash-safe completion semantics through the shared protocol.
-        Serializes once: both objects get the same bytes. A result over
-        the row budget raises before either object is written. Returns
-        the row count."""
-        text, rows = _json_array_text(df)
+    def write_versioned_json(self, artifact: str, version: str, csv_artifact: str) -> int:
+        """The JSON array of the committed ``csv_artifact@version``
+        (``csv_json_array``): latest first, version object, then the
+        LOGGED commit last — crash-safe completion semantics through the
+        shared protocol. Both objects get the same bytes; a result over
+        the row budget raises before either is written. The commit logs
+        the CSV commit's schema. Returns the row count."""
+        fields = self._log.schema_of(csv_artifact, version)
+        if fields is None:
+            raise FileNotFoundError(
+                f"{csv_artifact}@{version} is not a committed CSV artifact; "
+                "write it with write_versioned_csv first"
+            )
+        text, rows = csv_json_array(self._path(csv_artifact, version))
         _write_text(self._path(artifact, "latest"), text)
         _write_text(self._path(artifact, version), text)
-        self._commit(df, artifact, version, "artifact-json")
+        self._log._commit_logged(artifact, version, fields, op="artifact-json")
         return rows
 
     def write_versioned_csv(self, df: DataFrame, artifact: str, version: str) -> None:

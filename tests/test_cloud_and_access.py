@@ -155,9 +155,13 @@ def test_versioned_artifact_datasource(spark, tmp_path):
     sink = VersionedArtifactSink(tmp_path / "store")
     df1 = spark.range(3).select(F.col("id").cast("string").alias("v"))
     df2 = spark.range(5).select(F.col("id").cast("string").alias("v"))
-    sink.write_versioned_json(df1, "prism.json", "2024-01-01T00:00:00Z")
-    sink.write_versioned_json(df2, "prism.json", "2024-01-02T00:00:00Z")
-    sink.write_versioned_json(df1, "other.json", "2024-01-03T00:00:00Z")
+    for df, name, version in [
+        (df1, "prism", "2024-01-01T00:00:00Z"),
+        (df2, "prism", "2024-01-02T00:00:00Z"),
+        (df1, "other", "2024-01-03T00:00:00Z"),
+    ]:
+        sink.write_versioned_csv(df, f"{name}.csv", version)
+        sink.write_versioned_json(f"{name}.json", version, f"{name}.csv")
 
     spark.dataSource.register(VersionedArtifactDataSource)
     rows = (
@@ -173,10 +177,12 @@ def test_versioned_artifact_datasource(spark, tmp_path):
     assert by_key[("prism.json", "2024-01-02T00:00:00Z")].is_latest
     assert not by_key[("prism.json", "2024-01-01T00:00:00Z")].is_latest
     assert by_key[("other.json", "latest")].n_records == 3
-    # the source is distributed: one partition per artifact
+    # the source is distributed: one partition per artifact directory
+    # (the two JSON artifacts and the two CSV artifacts they derive from;
+    # the CSV version directories yield no rows)
     src = (
         spark.read.format("versioned_artifacts")
         .option("root", str(tmp_path / "store"))
         .load()
     )
-    assert src.rdd.getNumPartitions() == 2
+    assert src.rdd.getNumPartitions() == 4

@@ -155,6 +155,28 @@ def test_oracle_outputs_no_env_sensitive_types(ddb):
     assert not offenders, f"env-sensitive oracle output types: {offenders}"
 
 
+def test_oracle_outputs_no_nested_types(ddb):
+    """Registry-wide guard for list-valued outputs (ml_feature_hashing
+    lost a correctness row to one): canonicalizing a result by a pandas
+    sort over all columns cannot order list, map or struct cells. Every
+    registered output column must be a scalar — nested values ship as
+    text (``array_join`` / ``array_to_string``). Each engine entry
+    hash-matches its oracle, so the oracle's types stand for both."""
+    import __spark_entry__ as entrymod
+
+    offenders = []
+    for name, sql in entrymod.oracle_sql().items():
+        rel = ddb.sql(sql)
+        bad = [
+            (c, str(t))
+            for c, t in zip(rel.columns, rel.types)
+            if t.id in ("list", "array", "map", "struct", "union")
+        ]
+        if bad:
+            offenders.append((name, bad))
+    assert not offenders, f"nested oracle output types: {offenders}"
+
+
 def test_pack_bins_ffd_invariants(spark):
     """FFD results must be feasible (no bin over budget) and tight
     (bin count within the 11/9·OPT+1 FFD guarantee of the volume lower

@@ -90,6 +90,47 @@ def test_single_json_array_roundtrip(spark, tmp_path_factory, rows):
     assert sorted(data, key=key) == sorted(expect, key=key)
 
 
+# CSV-hostile text: quotes, separators, line breaks, edge whitespace and
+# multibyte characters, mixed into the generic alphabet.
+CSV_TEXT = st.one_of(
+    TEXT,
+    st.text(alphabet=st.sampled_from(['"', ",", "\n", "\r", " ", "a", "é", "☃"]), max_size=12),
+)
+CSV_DOUBLES = st.one_of(
+    st.floats(allow_nan=True, allow_infinity=True),
+    st.sampled_from([float("nan"), float("inf"), float("-inf"), -0.0, 1e7, 1e-5]),
+)
+CSV_ROWS = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1)),
+        st.one_of(st.none(), CSV_DOUBLES),
+        st.one_of(st.none(), CSV_TEXT),
+    ),
+    min_size=1,
+    max_size=15,
+)
+
+
+@SETTINGS
+@given(CSV_ROWS)
+def test_versioned_json_from_csv_equals_all_string_records(spark, tmp_path_factory, rows):
+    """The JSON array converted from the committed RFC-4180 CSV holds
+    exactly the records of the all-string projection (P16), in order."""
+    from nzwirelessmap_fetch_spark.sinks.writers import (
+        VersionedArtifactSink,
+        to_all_strings,
+    )
+
+    root = tmp_path_factory.mktemp("artifacts")
+    df = spark.createDataFrame(rows, "a long, b double, c string")
+    sink = VersionedArtifactSink(root)
+    sink.write_versioned_csv(df, "t.csv", "v1")
+    n = sink.write_versioned_json("t.json", "v1", "t.csv")
+    got = json.loads((root / "t.json" / "v1").read_text())
+    assert got == to_all_strings(df).toArrow().to_pylist()
+    assert n == len(rows)
+
+
 def _md5_long_model(s: str) -> int:
     import hashlib
 

@@ -95,16 +95,17 @@ def test_no_corpus_sized_broadcast_hints():
 
 def test_no_unguarded_driver_materialization():
     """Pin the README scale claim: `.collect()`/`.toPandas()`/`.toArrow()`
-    appear in the engine exactly five times, all bounded — the
-    row-budget-guarded single-array JSON writer (P17 bug-compat; one
-    Arrow collect), the N_QUERIES-row query-set fetch in the numpy top-k
-    (the broadcast side of a top-k, not data),
+    appear in the engine exactly four times, all bounded — the
+    N_QUERIES-row query-set fetch in the numpy top-k (the broadcast side
+    of a top-k, not data),
     the |event-types|-row state-list fetch seeding the Markov power
     iteration (the matrix dimension, never data), the 2-row corpus-totals
     fetch in DSIR scoring (two scalars from ONE pass over the persisted
     bigram stream — r4, replacing two full-corpus count() jobs), and the
-    `.limit(n).collect()` display path of the run_query CLI. Any new
-    driver-side materialization must be justified here by name."""
+    `.limit(n).collect()` display path of the run_query CLI. (The
+    single-array JSON writer converts the committed CSV and collects
+    nothing.) Any new driver-side materialization must be justified here
+    by name."""
     import pathlib
 
     import collections
@@ -123,7 +124,6 @@ def test_no_unguarded_driver_materialization():
         "operators/similarity.py": 1,
         "operators/text.py": 1,
         "run_query.py": 1,
-        "sinks/writers.py": 1,
     }, f"unexpected driver-side materialization: {nonzero}"
 
 

@@ -181,6 +181,25 @@ def test_exact_budget_env_override_is_absolute(monkeypatch):
     assert adm.exact_pair_budget() >= adm.MIN_BUDGET
 
 
+def test_default_driver_memory_never_exceeds_host():
+    """The session's default heap is a share of the host's RAM, capped at
+    the 48g the engine was sized on — never more than the host has (a
+    fixed 48g asks a 15 GB host for three times its memory)."""
+    from nzwirelessmap_fetch_spark.functions.admission import mem_total_bytes
+    from nzwirelessmap_fetch_spark.session import default_driver_memory
+
+    def mb(spec: str) -> int:
+        assert spec.endswith("m"), spec
+        return int(spec[:-1])
+
+    for host in [2**28, 2**30, 4 * 2**30, 15 * 10**9, 64 * 2**30, 2**40]:
+        got = mb(default_driver_memory(host))
+        assert 0 < got * 2**20 <= host, (host, got)
+        assert got <= 48 * 1024
+    assert default_driver_memory(2**40) == "49152m"  # the cap binds
+    assert 0 < mb(default_driver_memory()) * 2**20 <= mem_total_bytes()
+
+
 def test_spoofed_small_host_refuses_earlier(spark, monkeypatch):
     """End-to-end: on a spoofed tiny host (no env override) the winnow
     exact measure refuses at sf0.01 where the real host admits it."""

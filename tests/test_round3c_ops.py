@@ -324,9 +324,10 @@ def test_random_walks_follow_edges(spark):
     nodes = {a for a, _ in sym}
     assert len(walks) == len(nodes) * WALKS_PER_NODE
     for r in walks:
-        assert len(r.path) == WALK_LENGTH + 1
-        assert r.path[0] == r.start and r.path[-1] == r.end_node
-        for u, v in zip(r.path, r.path[1:]):
+        path = [int(x) for x in r.path.split(",")]
+        assert len(path) == WALK_LENGTH + 1
+        assert path[0] == r.start and path[-1] == r.end_node
+        for u, v in zip(path, path[1:]):
             assert (u, v) in sym  # every hop is a real edge
     # determinism: a second run yields the identical corpus
     again = graph_random_walks(spark, SF_SMOKE).collect()
