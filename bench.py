@@ -63,87 +63,29 @@ def main() -> None:
 
     timings: dict[str, float] = {}
 
-    # Shared-infrastructure build timed as its OWN line: three dedup
-    # queries (ngram_jaccard + both connected-components entries) consume
-    # the memoized verified-pair checkpoint, and whichever the sort order
-    # ran first used to absorb the whole similarity-join cost (round 1:
-    # dedup_cc_star showed 54 s of which ~51 s was this build). One build,
-    # explicit attribution; the suite total still includes it.
-    from nzwirelessmap_fetch_spark.operators.dedup import (
-        JACCARD_MAX_DF,
-        _verified_jaccard_pairs,
-    )
+    # Shared-infrastructure builds timed as their OWN lines, one per
+    # memoized substrate variant (functions/memo.py). Several entries
+    # consume each substrate, and whichever the sort order ran first used
+    # to absorb the whole build (round 1: dedup_cc_star showed 54 s of
+    # which ~51 s was the Jaccard pair build); without its own line a
+    # variant's best-of-2 retry records the cache hit and the build cost
+    # vanishes from the suite total. The suite total still includes it.
+    from nzwirelessmap_fetch_spark.functions.memo import SUBSTRATES
+    from nzwirelessmap_fetch_spark.operators.text import ExactMeasureBoundError
 
-    start = time.perf_counter()
-    _verified_jaccard_pairs(spark, sf_dir)
-    timings["shared_jaccard_pair_build"] = round(time.perf_counter() - start, 3)
-    # The df-capped twin memoizes separately; without its own line the
-    # best-of-2 retry records the cache hit and the build cost vanishes
-    # from the suite total.
-    start = time.perf_counter()
-    _verified_jaccard_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
-    timings["shared_jaccard_pair_build_capped"] = round(
-        time.perf_counter() - start, 3
-    )
-    # r6: the containment pair builds are memoized too (exact + capped
-    # feed corpus_containment, its twin AND the cap-eval — the eval alone
-    # used to rebuild both). Explicit attribution lines, same rationale.
-    from nzwirelessmap_fetch_spark.operators.dedup import _containment_pairs
-
-    start = time.perf_counter()
-    _containment_pairs(spark, sf_dir, max_df=None)
-    timings["shared_containment_build"] = round(time.perf_counter() - start, 3)
-    start = time.perf_counter()
-    _containment_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
-    timings["shared_containment_build_capped"] = round(
-        time.perf_counter() - start, 3
-    )
-    # Same attribution for the embedding-family PCA substrate: four
-    # queries (principal component, ABTT, PCA top-2, whitening) consume
-    # the memoized Gram accumulation + both power-iteration
-    # trajectories — one corpus pass + two dim²-grain iterate chains,
-    # one line.
-    from nzwirelessmap_fetch_spark.operators.sketches import _top2_components
-
-    start = time.perf_counter()
-    for frame in _top2_components(spark, sf_dir):
-        frame.count()
-    timings["shared_pc_build"] = round(time.perf_counter() - start, 3)
-    # r8 verdict directive #5: the winnowing exact/capped pair frames are
-    # memoized like the Jaccard/containment substrates, but had no
-    # attribution line — corpus_winnowing's best-of-2 recorded the cache
-    # hit (0.02 s) and ~12 s of real build cost vanished from per-line
-    # regression tracking. Same pattern as shared_jaccard_pair_build:
-    # one explicit line per memoized variant; the consumer entries then
-    # honestly measure their incremental work.
-    from nzwirelessmap_fetch_spark.operators.text import (
-        WINNOW_ADAPTIVE,
-        ExactMeasureBoundError,
-        _winnow_pairs,
-    )
-
-    start = time.perf_counter()
-    try:
-        _winnow_pairs(spark, sf_dir, max_df=None)
-    except ExactMeasureBoundError:
-        pass  # over-budget SF: the consumer entry records the refusal
-    timings["shared_winnow_build"] = round(time.perf_counter() - start, 3)
-    start = time.perf_counter()
-    _winnow_pairs(spark, sf_dir, max_df=WINNOW_ADAPTIVE)
-    timings["shared_winnow_build_capped"] = round(
-        time.perf_counter() - start, 3
-    )
-    # r10 verdict directive #1: the verified SimHash Hamming-≤3 pair
-    # stream is memoized like the Jaccard/containment substrates (three
-    # consumers: the pair entry, its content-hash adjudicator, the
-    # quality eval). Explicit attribution line so the ~78.8 M-pair build
-    # cost at sf1-Zipf stays visible instead of landing inside whichever
-    # consumer the sort order runs first.
-    from nzwirelessmap_fetch_spark.operators.dedup import _verified_simhash_pairs
-
-    start = time.perf_counter()
-    _verified_simhash_pairs(spark, sf_dir)
-    timings["shared_simhash_pair_build"] = round(time.perf_counter() - start, 3)
+    for sub in SUBSTRATES:
+        builder = getattr(sub.home(), sub.builder)
+        for label, kwargs in sub.bench_lines().items():
+            start = time.perf_counter()
+            try:
+                out = builder(spark, sf_dir, **kwargs)
+            except ExactMeasureBoundError:
+                pass  # over-budget SF: the consumer entry records the refusal
+            else:
+                # the PCA trajectories come back as lazy frames
+                for frame in out if isinstance(out, tuple) else ():
+                    frame.count()
+            timings[label] = round(time.perf_counter() - start, 3)
 
     def run_one(name: str, fn) -> float:
         start = time.perf_counter()

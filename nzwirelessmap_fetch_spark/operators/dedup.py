@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..functions.hashing import MERSENNE_P, md5_long
+from ..functions.memo import Aliased, Memo, memoized
 from ..functions.vectors import dot, norm
 
 # MinHash configuration: 16 permutations in 4 bands of 4 rows. Band-match
@@ -140,7 +141,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     green large-SF evidence and keep the unguarded path — their refusal
     story is r10 work if a gate ever shows them over-budget first.
 
-    Result is memoized per (application, sf_dir) as an eager checkpoint:
+    Result is memoized as an eager checkpoint:
     three registry queries (this one + both connected-components entries)
     consume the identical pair set, and the similarity join dominates all
     three — one build, |dup pairs| rows retained."""
@@ -194,11 +195,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _verified_jaccard_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
 
 
-# Checkpointed verified near-dup pairs, keyed per (application, sf_dir).
-# Keyed on sparkContext.applicationId (stable for a session's lifetime),
-# NOT id(spark) — CPython reuses ids after GC, which could hand a
-# checkpointed DataFrame bound to a stopped SparkContext to a new session.
-_PAIRS_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
+_PAIRS_CACHE = Memo("jaccard")  # checkpointed verified near-dup pairs
 
 # Corpus-adaptive prefix order (r6 verdict directive #2). The r6 2×2
 # matrix proved the best global prefix order FLIPS with df skew:
@@ -214,21 +211,21 @@ _PAIRS_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
 # by the df path (zero waste); on a flat corpus the probe pays only
 # the df groupBy, not the join-back that made hash order win.
 DF_SKEW_ORDER_RATIO = 8
-_ORDER_PROBE_CACHE: dict[tuple, str] = {}
+_ORDER_PROBE_CACHE = Memo("order_probe")
 
 
 def _prefix_order_sets(spark, sh, probe_key, order):
     """Build the doc → (globally-ordered shingle-hash array, size) table
     both pair builds share, resolving ``order="auto"`` via the df-skew
-    probe. Returns ``(resolved_order, sets, df_tab)`` — ``df_tab`` is a
-    persisted frame the CALLER must unpersist after materializing
-    ``sets`` (None when the hash path ran or the probe was cached)."""
+    probe, memoized under ``probe_key`` = ``(sf_dir, *variant)``. Returns
+    ``(resolved_order, sets, df_tab)`` — ``df_tab`` is a persisted frame
+    the CALLER must unpersist after materializing ``sets`` (None when the
+    hash path ran or the probe was cached)."""
     df_tab = None
     if order == "auto":
-        cached = _ORDER_PROBE_CACHE.get(probe_key)
-        if cached is not None:
-            order = cached
-        else:
+
+        def probe() -> str:
+            nonlocal df_tab
             df_tab = sh.groupBy("h").agg(F.count(F.lit(1)).alias("dfc")).persist()
             stats = df_tab.agg(
                 F.max("dfc").alias("mx"),
@@ -239,11 +236,13 @@ def _prefix_order_sets(spark, sh, probe_key, order):
             # than the shingle width) — `None >= int` raises TypeError.
             # Default to hash order: there is nothing to skew (r7 ADVICE).
             mx = int(stats["mx"] or 0)
-            order = "df" if mx >= DF_SKEW_ORDER_RATIO * p99 else "hash"
-            _ORDER_PROBE_CACHE[probe_key] = order
-            if order != "df":
-                df_tab.unpersist()
-                df_tab = None
+            return "df" if mx >= DF_SKEW_ORDER_RATIO * p99 else "hash"
+
+        sf_dir, *variant = probe_key
+        order = _ORDER_PROBE_CACHE.get_or_build(spark, sf_dir, tuple(variant), probe)
+        if df_tab is not None and order != "df":
+            df_tab.unpersist()
+            df_tab = None
     if order == "df":
         # df-ascending global order (canonical AllPairs/PPJoin): prefixes
         # carry the rarest shingles; (df, h) is a global total order so
@@ -275,6 +274,7 @@ def _prefix_order_sets(spark, sh, probe_key, order):
     return order, sets, df_tab
 
 
+@memoized("jaccard")
 def _verified_jaccard_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -284,10 +284,6 @@ def _verified_jaccard_pairs(
 ) -> DataFrame:
     # the guard never changes the RESULT, so it is not part of the memo
     # key — a cached frame (built by any consumer) serves guarded callers
-    key = (spark.sparkContext.applicationId, sf_dir, max_df, order)
-    cached = _PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = Catalog(spark, sf_dir).table("documents")
     # 64-bit xxhash64 shingle identity — PURELY INTERNAL key (the oracle
     # recomputes Jaccard from shingle STRINGS; results agree absent
@@ -311,9 +307,7 @@ def _verified_jaccard_pairs(
     # joins — and without the persist each consumer re-runs the whole
     # shingle aggregation (measured 20× slower). Unpersisted below once the
     # checkpoint materializes.
-    resolved, sets, probe_tab = _prefix_order_sets(
-        spark, sh, (spark.sparkContext.applicationId, sf_dir, max_df), order
-    )
+    resolved, sets, probe_tab = _prefix_order_sets(spark, sh, (sf_dir, max_df), order)
     # Eager materialization (scalar count, no driver data): the plan below
     # consumes `sets` from FOUR subtrees. A lazy persist is populated by
     # whichever stage runs first — and concurrently-scheduled stages that
@@ -424,11 +418,9 @@ def _verified_jaccard_pairs(
     )
     sets.unpersist()
     cand.unpersist()
-    _PAIRS_CACHE[key] = pairs
     # an "auto" build and an explicit call for the order it resolved to
     # are the same frame — share the checkpoint under both keys
-    _PAIRS_CACHE[key[:3] + (resolved,)] = pairs
-    return pairs
+    return Aliased(pairs, ((max_df, resolved),))
 
 
 DEDUP_NGRAM_JACCARD_SQL = """
@@ -811,10 +803,10 @@ MAX_CC_ITERATIONS = 50
 def _jaccard_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric, distinct (doc_a, doc_b) edges at J ≥ 0.5.
 
-    Builds on the memoized verified-pair checkpoint (_PAIRS_CACHE), so
-    the expensive similarity join runs once per (application, sf_dir) no
-    matter how many of the three consuming queries execute; symmetrizing
-    |dup pairs| checkpointed rows is noise."""
+    Builds on the memoized verified-pair checkpoint, so the expensive
+    similarity join runs once no matter how many of the consuming
+    queries execute; symmetrizing |dup pairs| checkpointed rows is
+    noise."""
     pairs = _verified_jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return (
         pairs.union(
@@ -1193,17 +1185,16 @@ WHERE d.doc_id % {INCREMENTAL_BATCH_MOD} = 0
 
 HAMMING_MAX = 3  # ≤3 bit flips: 4-byte banding then has an intact band (pigeonhole)
 
-# Checkpointed verified Hamming-≤3 pair stream, keyed per
-# (application, sf_dir) — the _PAIRS_CACHE discipline applied to the
-# SimHash family (r10 verdict directive #1). THREE registry entries
-# consume substantially the same 78.8 M-pair result at sf1-Zipf
-# (dedup_simhash_hamming, its content-hash adjudicator, and the
-# quality eval's candidate side); before this memo each re-derived the
-# full banding join (~943 s of the 3,111 s sf1-Zipf Spark-side bar).
-# One build, one eager localCheckpoint, three readers.
-_SIMHASH_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
+# Checkpointed verified Hamming-≤3 pair stream (r10 verdict directive
+# #1). THREE registry entries consume substantially the same 78.8 M-pair
+# result at sf1-Zipf (dedup_simhash_hamming, its content-hash
+# adjudicator, and the quality eval's candidate side); before this memo
+# each re-derived the full banding join (~943 s of the 3,111 s sf1-Zipf
+# Spark-side bar). One build, one eager localCheckpoint, three readers.
+_SIMHASH_PAIRS_CACHE = Memo("simhash")
 
 
+@memoized("simhash")
 def _verified_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized verified SimHash pair stream: (doc_a, doc_b, hamming)
     with hamming ≤ HAMMING_MAX, doc_a < doc_b, pairs DISTINCT by
@@ -1230,10 +1221,6 @@ def _verified_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast-join probe ran on the single-row-group scan's ONE
     task, serializing the entire pair production.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SIMHASH_PAIRS_CACHE.get(key)
-    if cached is not None:
-        return cached
     # persist: the signature build (tokenize + per-word md5 + fold over
     # the whole corpus) feeds BOTH sides of the self-join; without it
     # Spark computes the subtree twice (measured 2× at sf0.1).
@@ -1285,7 +1272,6 @@ def _verified_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     sigs.unpersist()
-    _SIMHASH_PAIRS_CACHE[key] = pairs
     return pairs
 
 
@@ -1564,25 +1550,21 @@ def corpus_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _containment_pairs(spark, sf_dir, max_df=JACCARD_MAX_DF)
 
 
-# Memoized per (application, sf_dir, max_df, order) like _PAIRS_CACHE:
-# three registry entries (exact, capped, cap-eval) consume these builds,
+# Three registry entries (exact, capped, cap-eval) consume these builds,
 # and the cap-eval consumes BOTH — without the memo the suite runs the
 # inverted-index build up to twice per variant (r6: ~9 s duplicate work
 # per bench run). Output is pair-volume-sized; localCheckpoint truncates
 # the lineage and frees the internal `sets` persist.
-_CONTAIN_CACHE: dict[tuple, DataFrame] = {}
+_CONTAIN_CACHE = Memo("containment")
 
 
+@memoized("containment")
 def _containment_pairs(
     spark: SparkSession,
     sf_dir: str,
     max_df: int | None = None,
     order: str = "auto",
 ) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, max_df, order)
-    cached = _CONTAIN_CACHE.get(key)
-    if cached is not None:
-        return cached
     d = Catalog(spark, sf_dir).table("documents")
     # Asymmetric prefix filter (SSJoin overlap/containment variant —
     # exact, no recall loss): for C(A→B) = |A∩B|/|A| ≥ t, an A that
@@ -1609,9 +1591,7 @@ def _containment_pairs(
     sh = _shingles(d, max_df=max_df).select(
         "doc_id", F.xxhash64("shingle").alias("h")
     )
-    resolved, sets, probe_tab = _prefix_order_sets(
-        spark, sh, (spark.sparkContext.applicationId, sf_dir, max_df), order
-    )
+    resolved, sets, probe_tab = _prefix_order_sets(spark, sh, (sf_dir, max_df), order)
     # Eager fill: `sets` feeds three subtrees (prefix probes, full
     # postings, verify arrays) — concurrently-scheduled consumers of a
     # lazy persist would each recompute the shingle aggregation.
@@ -1717,9 +1697,7 @@ def _containment_pairs(
         .localCheckpoint(eager=True)
     )
     sets.unpersist()
-    _CONTAIN_CACHE[key] = out
-    _CONTAIN_CACHE[key[:3] + (resolved,)] = out
-    return out
+    return Aliased(out, ((max_df, resolved),))
 
 
 CORPUS_CONTAINMENT_SQL = f"""

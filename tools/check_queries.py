@@ -85,47 +85,15 @@ def main(names: list[str]) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{pattern}')"
         )
 
-    # Shared-build attribution (r10 verdict directive #4): the memoized
-    # substrates (jaccard/containment/winnow pair frames, PC power
-    # iteration, simhash pair stream) build inside whichever consumer
-    # the shard order runs FIRST, which forces family-sum diffs when
-    # comparing bars across rounds. With SPARK_GRAFT_ATTR_SHARED=1 the
-    # memo builders are wrapped with a timer that records every
-    # cache-MISS build (calls ≥0.1 s; hits return in µs) into a
-    # "_shared_builds" sidecar keyed by build name — no behavior
-    # change, no extra builds, exact attribution of where the cost
-    # landed. merge_sf1_artifacts and extract_bench_sf1 surface the
-    # sidecar; adjudication ignores it.
-    shared_builds: dict[str, float] = {}
-    if os.environ.get("SPARK_GRAFT_ATTR_SHARED") == "1":
-        from nzwirelessmap_fetch_spark.operators import dedup as _dd
-        from nzwirelessmap_fetch_spark.operators import sketches as _sk
-        from nzwirelessmap_fetch_spark.operators import text as _tx
+    # Shared-build attribution (r10 verdict directive #4): a memoized
+    # substrate builds inside whichever consumer runs FIRST, so the memo's
+    # own build timings go to a "_shared_builds" sidecar (surfaced by
+    # merge_sf1_artifacts and extract_bench_sf1, ignored by adjudication).
+    # An entry touching a substrate it is not declared to consume would
+    # be split from its memo family by the sharded gate: "_memo_undeclared".
+    from nzwirelessmap_fetch_spark.functions import memo
 
-        def _attr_wrap(mod, fname, label):
-            orig = getattr(mod, fname)
-
-            def timed(*a, **kw):
-                t0 = time.monotonic()
-                try:
-                    return orig(*a, **kw)
-                finally:
-                    dt = time.monotonic() - t0
-                    if dt >= 0.1:
-                        key = label
-                        if kw.get("max_df") is not None:
-                            key += "_capped"
-                        shared_builds[key] = round(
-                            shared_builds.get(key, 0.0) + dt, 2
-                        )
-
-            setattr(mod, fname, timed)
-
-        _attr_wrap(_dd, "_verified_jaccard_pairs", "shared_jaccard_pair_build")
-        _attr_wrap(_dd, "_containment_pairs", "shared_containment_build")
-        _attr_wrap(_dd, "_verified_simhash_pairs", "shared_simhash_pair_build")
-        _attr_wrap(_tx, "_winnow_pairs", "shared_winnow_build")
-        _attr_wrap(_sk, "_top2_components", "shared_pc_build")
+    memo.RECORDER = traffic = memo.Traffic()
 
     # admission-budget header (r10 ADVICE): snapshot at run START —
     # the budget derives from free disk, which mid-run spill churn
@@ -138,6 +106,7 @@ def main(names: list[str]) -> int:
     results: dict[str, dict] = {}
     failures = 0
     for name in names:
+        traffic.entry = name
         t0 = time.monotonic()
         row: dict = {}
         try:
@@ -311,14 +280,19 @@ def main(names: list[str]) -> int:
         print(f"{name}: {json.dumps(row)}", flush=True)
 
     bounded = sum(1 for r in results.values() if r.get("bounded"))
+    undeclared = traffic.undeclared()
+    if undeclared:
+        print(f"\nmemo traffic of undeclared consumers: {json.dumps(undeclared)}")
     print(
         f"\n{len(names)} checked, {failures} failing"
         + (f", {bounded} budget-bounded (twin-adjudicated)" if bounded else "")
     )
     out = os.environ.get("SPARK_GRAFT_CHECK_OUT")
     if out:
-        if shared_builds:
-            results["_shared_builds"] = shared_builds
+        if traffic.builds:
+            results["_shared_builds"] = traffic.builds
+        if undeclared:
+            results["_memo_undeclared"] = undeclared
         # run-start snapshot (see above): cross-run verdict flips
         # (pass ↔ bounded refusal) stay explainable from artifacts alone
         results["_admission"] = admission_header

@@ -40,6 +40,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+from nzwirelessmap_fetch_spark.functions import memo  # noqa: E402
+
 
 def reap_orphan_spill_dirs() -> list[str]:
     """Delete /tmp/duckdb_spill_<pid> dirs whose pid is no longer
@@ -71,56 +73,7 @@ def reap_orphan_spill_dirs() -> list[str]:
 # consumes BOTH the simhash and jaccard substrates, chaining those two
 # families into one group that lands on the H shard with the
 # oracle-cache-eligible truth entries.
-MEMO_FAMILIES: list[set[str]] = [
-    {  # _verified_simhash_pairs (operators/dedup.py)
-        "dedup_simhash_hamming",
-        "dedup_simhash_content_hash",
-        "dedup_simhash_quality_eval",
-    },
-    {  # _winnow_pairs (operators/text.py)
-        "corpus_winnowing",
-        "corpus_winnowing_capped",
-        "corpus_winnowing_cap_eval",
-    },
-    {  # _containment_pairs (operators/dedup.py)
-        "corpus_containment",
-        "corpus_containment_capped",
-        "corpus_containment_cap_eval",
-    },
-    {  # _top2_components (operators/sketches.py)
-        "embedding_principal_component",
-        "embedding_abtt_residual",
-        "embedding_pca_top2",
-        "embedding_whitening",
-    },
-    {  # _verified_jaccard_pairs (operators/dedup.py) — including the
-        # 11 graph entries that reach it through _jaccard_edges
-        # (operators/graph.py). Today every one of those is also
-        # oracle-cache ELIGIBLE (so they ride the H shard regardless);
-        # listing them here keeps the one-shard-per-memo invariant true
-        # even if the ELIGIBLE set changes.
-        "dedup_ngram_jaccard",
-        "dedup_ngram_jaccard_capped",
-        "dedup_lsh_quality_eval",
-        "dedup_simhash_quality_eval",
-        "dedup_snm_quality_eval",
-        "dedup_snm_multipass_eval",
-        "dedup_connected_components",
-        "dedup_cc_star",
-        "corpus_canonical_picks",
-        "graph_pagerank",
-        "graph_bfs_levels",
-        "graph_triangle_count",
-        "graph_assortativity",
-        "graph_kcore",
-        "graph_modularity",
-        "graph_louvain_one_level",
-        "graph_louvain_two_level",
-        "graph_louvain_converged",
-        "graph_community_label_prop",
-        "graph_random_walks",
-    },
-]
+MEMO_FAMILIES: list[set[str]] = [set(s.consumers) for s in memo.SUBSTRATES]
 
 
 def _memo_groups(names: list[str]) -> dict[str, int]:
@@ -217,7 +170,6 @@ def main(argv: list[str]) -> int:
             SPARK_GRAFT_DRIVER_MEM="20g",
             SPARK_GRAFT_CPUS="10",
             SPARK_GRAFT_ORACLE_SEQ="1",
-            SPARK_GRAFT_ATTR_SHARED="1",
         )
         env.pop("SPARK_GRAFT_ORACLE_LOCK", None)  # see module docstring
         shard_files.append(env["SPARK_GRAFT_CHECK_OUT"])
